@@ -11,7 +11,7 @@ idiomatic Spark pipeline over Common-Crawl-style web pages:
 * Gopher/C4-style heuristic rules;
 * compiled-regex PII/toxicity scrubbing (ancestor: the reference's SQL
   safety regex layer, agents/unity_sql_agent.py:127-159);
-* per-partition audit lineage + resumable processed-partition manifests
+* per-partition audit lineage, which is also the resume record
   (ancestor: agents/base_agent.py:60-103 result envelope + retry logic).
 
 Everything is DataFrame/SQL-first: no RDDs, no per-row Python UDFs.

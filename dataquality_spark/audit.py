@@ -10,8 +10,11 @@ distinct-url count per SURVEY.md §7 risk 5) becomes the n_docs /
 n_distinct_urls columns; per-column completeness is the reference's
 completeness ratio aggregate (DataQuality_AI_CaseStudy.md:111).
 
-All aggregation is partial+final HashAggregate over partition_id — one
-shuffle, map-side combined.
+All metrics come from ONE groupBy over partition_id (partial+final
+HashAggregate, map-side combined, plus the exchange exact distinct-url
+counting needs). The per-rule hit counts are count_if columns of that
+same aggregate, so the rule_hits arrays are never exploded and
+re-joined.
 """
 
 from __future__ import annotations
@@ -21,27 +24,49 @@ from pyspark.sql import functions as F
 
 from . import config as C
 
-COMPLETENESS_COLUMNS = ["url", "warc_ts", "text", "lang"]
+# completeness_<name> is the non-null fraction of its source column. Text
+# completeness reads text_scrubbed, which is NULL exactly when text is
+# (the scrub never invents text), so the same audit row comes out of the
+# with_decisions() frame and of the written decisions table, which
+# carries no raw text.
+COMPLETENESS_COLUMNS = {"url": "url", "warc_ts": "warc_ts",
+                        "text": "text_scrubbed", "lang": "lang"}
+
+# Columns audit_metrics reads: what a read-back of the decisions table
+# must project.
+AUDIT_INPUT_COLUMNS = [C.PARTITION_COL, "keep", "rule_hits",
+                       "pii_email", "pii_phone", "pii_ipv4", "pii_toxicity",
+                       *COMPLETENESS_COLUMNS.values()]
 
 
 def audit_metrics(enriched: DataFrame,
                   approx_distinct: bool = False) -> DataFrame:
-    """One audit row per partition_id from the with_decisions() frame.
+    """One audit row per partition_id from a with_decisions() frame or
+    the decisions table it was written to.
 
     `approx_distinct=True` switches distinct-url counting to HLL
     (approx_count_distinct) — the 10^12-doc setting where exact
     count_distinct would add an extra expand/shuffle.
     """
-    pid = C.PARTITION_COL
     distinct_urls = (F.approx_count_distinct("url") if approx_distinct
                      else F.count_distinct("url"))
+    n = F.count(F.lit(1))
     completeness = [
-        F.round(F.count(c).cast("double") / F.count(F.lit(1)),
-                C.SCORE_DECIMALS).alias(f"completeness_{c}")
-        for c in COMPLETENESS_COLUMNS if c in enriched.columns
+        F.round(F.count(src).cast("double") / n,
+                C.SCORE_DECIMALS).alias(f"completeness_{name}")
+        for name, src in COMPLETENESS_COLUMNS.items()
     ]
-    base = enriched.groupBy(pid).agg(
-        F.count(F.lit(1)).alias("n_docs"),
+    # rule -> docs hitting it, keys sorted, rules with no hit left out
+    # (a rule occurs at most once in a doc's rule_hits)
+    rules = sorted(C.ALL_RULES)
+    hit_counts = F.map_filter(
+        F.map_from_arrays(
+            F.array(*[F.lit(r) for r in rules]),
+            F.array(*[F.count_if(F.array_contains("rule_hits", r))
+                      for r in rules])),
+        lambda _, v: v > 0)
+    return enriched.groupBy(C.PARTITION_COL).agg(
+        n.alias("n_docs"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
         distinct_urls.alias("n_distinct_urls"),
         F.sum("pii_email").cast("long").alias("n_pii_email"),
@@ -49,19 +74,5 @@ def audit_metrics(enriched: DataFrame,
         F.sum("pii_ipv4").cast("long").alias("n_pii_ipv4"),
         F.sum("pii_toxicity").cast("long").alias("n_pii_toxicity"),
         *completeness,
+        hit_counts.alias("rule_hit_counts"),
     )
-
-    # rule_hit_counts map: explode → count → deterministic sorted map.
-    hits = (enriched
-            .select(pid, F.explode("rule_hits").alias("rule"))
-            .groupBy(pid, "rule").agg(F.count(F.lit(1)).alias("n"))
-            .groupBy(pid)
-            .agg(F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("rule", "n"))))
-                .alias("rule_hit_counts")))
-
-    return base.join(hits, pid, "left").withColumn(
-        "rule_hit_counts",
-        F.coalesce("rule_hit_counts",
-                   F.map_from_arrays(F.array().cast("array<string>"),
-                                     F.array().cast("array<bigint>"))))

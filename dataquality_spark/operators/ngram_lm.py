@@ -35,6 +35,12 @@ LM is that idea applied to text likelihood (SURVEY.md §0 graft).
   empties dropped), so a token can never contain a space and the
   bigram string "w1 w2" is losslessly split back with split_part —
   the property the DuckDB twin relies on.
+* The lattice weight floor(scale * (ln(pair_n) - ln(ctx_n))) assumes the
+  JVM's Math.log and the libm `log` DuckDB uses agree to the last ULP:
+  a one-ULP difference at a floor boundary would move one weight by one
+  lattice unit and fail the exact oracle. They agree on the platforms
+  the contract has run on (as for dsir_importance); a port to another
+  platform should recheck it.
 """
 
 from __future__ import annotations

@@ -17,6 +17,9 @@ def get_spark(app_name: str = "dataquality_spark",
 
     `master` defaults to local[$SPARK_GRAFT_CPUS] (env, fallback all cores);
     on a real cluster pass master=None with a spark-submit-provided master.
+    `shuffle_partitions` defaults to the session's defaultParallelism (its
+    task slots), so a shuffle of a small frame runs one wave of tasks
+    instead of many near-empty ones; AQE still coalesces below that.
     """
     # Arrow's bundled jemalloc pool mmaps/releases kernel pages on its
     # own decay schedule; on lazily-backed VMs the vectorized UDFs'
@@ -38,8 +41,6 @@ def get_spark(app_name: str = "dataquality_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(C.ARROW_MAX_RECORDS_PER_BATCH))
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or 32))
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL",
                 os.environ["ARROW_DEFAULT_MEMORY_POOL"])
@@ -52,4 +53,8 @@ def get_spark(app_name: str = "dataquality_spark",
         builder = builder.master(f"local[{cpus}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set("spark.sql.shuffle.partitions", str(
+            shuffle_partitions or spark.sparkContext.defaultParallelism))
+    return spark

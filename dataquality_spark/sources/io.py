@@ -5,7 +5,7 @@ days(warc_ts) (+ hashed-host bucketing) so warc_ts predicates and the
 resume anti-join prune at the scan. The sandbox has no Iceberg jars, so
 the default path is plain Parquet with the derived `partition_id` column
 used as a physical partition directory — identical semantics (pruning,
-manifests, dynamic-partition-overwrite idempotence), different catalog.
+resume, dynamic-partition-overwrite idempotence), different catalog.
 
 Reference ancestry: table access by fixed identifier
 (/root/reference/agents/unity_sql_agent.py:82-86) and the fixed declared
@@ -155,6 +155,8 @@ def write_decisions(decisions: DataFrame, out_dir: str) -> None:
 
 
 def append_audit(audit_df: DataFrame, out_dir: str) -> None:
+    """Append as ONE file: its rename at job commit is atomic, which is
+    what lets the audit table serve as run_pipeline's commit record."""
     audit_df.coalesce(1).write.mode("append").parquet(out_dir)
 
 

@@ -6,22 +6,27 @@
         [--approx-distinct] [--repartition N]
 
 Lifecycle (SURVEY.md §3 new-engine equivalent): config → read pages with
-fixed schema → resume anti-join against the processed-partition manifest →
-optional salted repartition → decision pipeline → dynamic-partition-
-overwrite decisions write → audit rows (+ wall-clock throughput from
-time.monotonic) → manifest append.
+fixed schema → resume anti-join against the partitions the audit table
+records → optional salted repartition → decision pipeline →
+dynamic-partition-overwrite decisions write straight from the plan (an
+Observation on it returns the doc count and the written partitions) →
+audit rows over a read-back of the slim decisions columns of those
+partitions (+ wall-clock throughput from time.monotonic), appended as one
+file: the commit record resume reads.
 """
 
 from __future__ import annotations
 
 import argparse
 import datetime
+import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from dataquality_spark import audit, config as C, pipeline, resume  # noqa: E402
@@ -33,8 +38,6 @@ from dataquality_spark.sources import io  # noqa: E402
 def run(argv: list[str] | None = None) -> dict:
     """CLI wrapper: on failure print ONE structured JSON error line
     (category + suggestions, reference A22 analog) and exit non-zero."""
-    import json
-
     try:
         return _run(argv)
     except SystemExit:
@@ -78,7 +81,6 @@ def _run(argv: list[str] | None = None) -> dict:
 
     decisions_dir = os.path.join(args.output, "decisions")
     audit_dir = os.path.join(args.output, "audit")
-    manifest_dir = os.path.join(args.output, "manifests")
 
     reader = io.read_pages_lenient if args.lenient_schema else io.read_pages
     pages = reader(spark, args.input)
@@ -86,7 +88,7 @@ def _run(argv: list[str] | None = None) -> dict:
         C.PARTITION_COL, F.date_format("warc_ts", "yyyy-MM"))
 
     done = [] if args.no_resume else resume.completed_partitions(
-        spark, manifest_dir)
+        spark, audit_dir)
     remaining = resume.filter_remaining(pages, done)
 
     if args.previous:
@@ -122,15 +124,19 @@ def _run(argv: list[str] | None = None) -> dict:
         salt_repartition=args.repartition,
         # rank url-duplicates against the FULL corpus even when resuming
         dedup_scope=pages.drop(C.PARTITION_COL) if done else None)
-    enriched = enriched.persist()
 
-    decisions_df = enriched.select(*pipeline.DECISION_COLUMNS)
+    # No persist: the decisions are written straight from the plan, and
+    # the Observation hands back what the audit needs of the written rows
+    # without another Spark job.
+    written = Observation("written")
+    decisions_df = enriched.select(*pipeline.DECISION_COLUMNS).observe(
+        written, F.count(F.lit(1)).alias("n_docs"),
+        F.collect_set(C.PARTITION_COL).alias("partitions"))
     io.write_decisions(decisions_df, decisions_dir)
 
     elapsed = time.monotonic() - t0
-    per_part = (enriched.groupBy(C.PARTITION_COL)
-                .agg(F.count(F.lit(1)).alias("n")).collect())
-    n_docs = sum(r.n for r in per_part)
+    seen = written.get
+    n_docs, partitions = seen["n_docs"], sorted(seen["partitions"])
 
     finished = datetime.datetime(2000, 1, 1)  # placeholder when frozen
     try:  # wall-clock allowed at runtime (audit metadata, not data logic)
@@ -138,28 +144,30 @@ def _run(argv: list[str] | None = None) -> dict:
     except Exception:
         pass
 
-    audit_df = (audit.audit_metrics(enriched,
-                                    approx_distinct=args.approx_distinct)
-                .withColumn("started_at",
-                            F.lit(finished - datetime.timedelta(
-                                seconds=elapsed)))
-                .withColumn("finished_at", F.lit(finished))
-                .withColumn("docs_per_sec",
-                            F.lit(round(n_docs / max(elapsed, 1e-9), 3))))
-    io.append_audit(audit_df, audit_dir)
-
-    resume.record_done(spark, manifest_dir,
-                       [(r[C.PARTITION_COL], r.n) for r in per_part],
-                       finished)
-    enriched.unpersist()
+    if partitions:
+        # read back only the audit's columns of this run's partitions
+        # (pruned at the scan), then append the audit rows: that one file
+        # is the commit record resume.completed_partitions reads
+        slim = (spark.read.schema(decisions_df.schema).parquet(decisions_dir)
+                .where(F.col(C.PARTITION_COL).isin(partitions))
+                .select(*audit.AUDIT_INPUT_COLUMNS))
+        audit_df = (audit.audit_metrics(slim,
+                                        approx_distinct=args.approx_distinct)
+                    .withColumn("started_at",
+                                F.lit(finished - datetime.timedelta(
+                                    seconds=elapsed)))
+                    .withColumn("finished_at", F.lit(finished))
+                    .withColumn("docs_per_sec",
+                                F.lit(round(n_docs / max(elapsed, 1e-9), 3))))
+        io.append_audit(audit_df, audit_dir)
     from dataquality_spark.caching import unpersist_all
     unpersist_all()  # release the dedup-flags cache
 
-    stats = {"n_docs": n_docs, "n_partitions": len(per_part),
+    stats = {"n_docs": n_docs, "n_partitions": len(partitions),
              "elapsed_sec": round(elapsed, 3),
              "docs_per_sec": round(n_docs / max(elapsed, 1e-9), 1),
              "skipped_partitions": len(done)}
-    print(stats)
+    print(json.dumps(stats))
     return stats
 
 

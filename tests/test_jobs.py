@@ -76,6 +76,29 @@ def test_run_pipeline_and_resume(spark, pages_dir, tmp_path):
     assert spark.read.parquet(os.path.join(out, "decisions")).count() == 400
 
 
+def test_run_pipeline_spark_jobs_and_json_stats(spark, pages_dir, tmp_path,
+                                                capsys):
+    """A fresh-crawl run launches a bounded number of Spark jobs (the
+    decisions are written once, straight from the plan) and prints its
+    stats as one JSON line."""
+    from jobs import run_pipeline
+
+    sc = spark.sparkContext
+    group = "run-pipeline-job-count"
+    sc.setJobGroup(group, "fresh crawl")
+    try:
+        stats = run_pipeline.run(["--input", pages_dir, "--output",
+                                  str(tmp_path / "out"), "--no-resume"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 12, n_jobs
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert json.loads(line) == stats
+    assert stats["n_docs"] == 400
+
+
 def test_run_pipeline_error_is_structured(capsys):
     from jobs import run_pipeline
 
