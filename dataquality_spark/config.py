@@ -152,6 +152,15 @@ SALT_BUCKETS = 16                    # salt modulus for skewed-host repartition
 # most this many rows (~60 B/row ⇒ ≤ ~300 MB build side); beyond it the
 # flag join falls back to a shuffle join.
 BROADCAST_FLAGS_MAX_ROWS = 5_000_000
+# Near-dup connected components run as a union-find on the driver when
+# the pair graph has at most this many distinct edges (≤ ~550 B/edge of
+# driver Python memory at peak for the collected rows and the
+# union-find map ⇒ ≤ ~110 MB; the broadcast (node, component) map is
+# ≤ 2 nodes/edge × 16 B ⇒ ≤ ~6.4 MB); beyond it
+# graph.connected_components runs the distributed large-star/small-star
+# loop. The benchmark's kept docs (~15% planted near-dups) verify 283
+# edges per 1k docs, so at that rate the cap covers ~700k docs.
+COMPONENTS_DRIVER_MAX_EDGES = 200_000
 
 # Optional ingest-materialized content fingerprint. When the pages input
 # carries this column (= crc32 of the UTF-8 bytes of coalesce(text,''),

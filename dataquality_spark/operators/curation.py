@@ -408,24 +408,11 @@ def _word_ngrams(text_col: str, n: int):
     """All word n-grams of orders 1..n (DSIR's unigram+bigram feature
     space for n=2) over the contract tokenizer (ASCII-whitespace split,
     empty tokens dropped — text_analysis._words)."""
-    from .text_analysis import _words
+    from .text_analysis import _words, word_ngrams
 
     words = _words(F.col(text_col))
-
-    def grams(order: int):
-        # NOTE: the transform lambda must take exactly ONE parameter —
-        # a second parameter would receive the element INDEX from
-        # F.transform, not a closure default.
-        m = F.size(words) - (order - 1)
-        return F.when(m > 0, F.transform(
-            F.sequence(F.lit(1), F.greatest(m, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, order))
-        )).otherwise(F.array().cast("array<string>"))
-
-    out = grams(1)
-    for order in range(2, n + 1):
-        out = F.concat(out, grams(order))
-    return out
+    return F.concat(*[word_ngrams(words, order)
+                      for order in range(1, n + 1)])
 
 
 def dsir_importance(train: DataFrame, target: DataFrame, text_col: str,

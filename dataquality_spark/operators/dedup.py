@@ -48,6 +48,7 @@ _MERSENNE = (1 << 61) - 1
 # then call `unpersist_all()` (re-exported from ..caching).
 from ..caching import track_persist as _track_persist  # noqa: E402
 from ..caching import unpersist_all  # noqa: E402,F401
+from .text_analysis import _words, md5_60, word_ngrams  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -81,15 +82,10 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def shingle_hashes(text, n: int = 3):
-    """array<long> of distinct xxhash64'd word n-gram shingles (codegen)."""
-    words = F.filter(F.split(F.coalesce(text, F.lit("")), r"\s+"),
-                     lambda w: w != "")
-    k = F.size(words) - (n - 1)
-    grams = F.when(k > 0, F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, n)))
-    )).otherwise(F.array().cast("array<long>"))
-    return F.array_distinct(grams)
+    """array<long> of distinct xxhash64'd word n-gram shingles. JVM-side
+    but interpreted (higher-order functions do not codegen), so the
+    grams come from text_analysis.word_ngrams: linear in doc length."""
+    return F.array_distinct(word_ngrams(_words(text), n, F.xxhash64))
 
 
 def ngram_jaccard(left_sh, right_sh):
@@ -166,7 +162,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       max_bucket: int | None = 10_000) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) with exact verification.
 
-    Stages: shingle (codegen) → minhash bands (one Arrow UDF) → explode →
+    Stages: shingle (JVM) → minhash bands (one Arrow UDF) → explode →
     hot-bucket cap (boilerplate-identical docs belong to exact_dedup) →
     in-bucket self-join → distinct candidate pairs → exact Jaccard on
     shingle arrays → threshold filter.
@@ -371,16 +367,7 @@ def md5_shingle_hashes(text, n: int = 2):
     conv(substr(md5(s),1,15),16,10) bit-identically via a hex cast).
     15 hex chars = 60 bits keeps the value positive in a signed int64
     on both engines."""
-    words = F.filter(F.split(F.coalesce(text, F.lit("")), r"\s+"),
-                     lambda w: w != "")
-    k = F.size(words) - (n - 1)
-    grams = F.when(k > 0, F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(" ", F.slice(words, i, n))), 1, 15),
-            16, 10).cast("long")
-    )).otherwise(F.array().cast("array<long>"))
-    return F.array_distinct(grams)
+    return F.array_distinct(word_ngrams(_words(text), n, md5_60))
 
 
 def dup_span_stats(df: DataFrame, text_col: str, id_col: str,
@@ -403,21 +390,13 @@ def dup_span_stats(df: DataFrame, text_col: str, id_col: str,
     suffix-array pass is deliberately out of scope — the paper's
     production Common-Crawl dedup also operated at a fixed span length.
     """
-    words = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")),
-                             r"\s+"), lambda w: w != "")
-    base = df.select(F.col(id_col).alias("id"), words.alias("_w"))
-    m = F.size("_w") - (k - 1)
+    base = df.select(F.col(id_col).alias("id"),
+                     _words(F.col(text_col)).alias("_w"))
     spans = base.select(
         "id", F.size("_w").cast("long").alias("n_tokens"),
-        F.when(m > 0, F.transform(
-            F.sequence(F.lit(1), F.greatest(m, F.lit(1))),
-            lambda i: F.struct(
-                i.alias("pos"),
-                F.conv(F.substring(
-                    F.md5(F.concat_ws(" ", F.slice(F.col("_w"), i, k))),
-                    1, 15), 16, 10).cast("long").alias("h"))))
-        .otherwise(F.array().cast("array<struct<pos:int,h:long>>"))
-        .alias("_g"))
+        F.transform(word_ngrams(F.col("_w"), k, md5_60),
+                    lambda h, i: F.struct((i + 1).alias("pos"),
+                                          h.alias("h"))).alias("_g"))
     # persist: the exploded (id, pos, h) frame feeds the global count
     # AND the dup join — without it the shingle+md5 projection runs
     # twice more (same rationale as the minhash signature persist at
@@ -488,21 +467,13 @@ def remove_dup_spans(df: DataFrame, text_col: str, id_col: str,
     fixed-k interval-union approximation of the paper's suffix-array
     cut, applied identically in the SQL oracle.
     """
-    words = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")),
-                             r"\s+"), lambda w: w != "")
-    base = df.select(F.col(id_col).alias("id"), words.alias("_w"))
-    m = F.size("_w") - (k - 1)
+    base = df.select(F.col(id_col).alias("id"),
+                     _words(F.col(text_col)).alias("_w"))
     spans = base.select(
         "id", "_w",
-        F.when(m > 0, F.transform(
-            F.sequence(F.lit(1), F.greatest(m, F.lit(1))),
-            lambda i: F.struct(
-                i.alias("pos"),
-                F.conv(F.substring(
-                    F.md5(F.concat_ws(" ", F.slice(F.col("_w"), i, k))),
-                    1, 15), 16, 10).cast("long").alias("h"))))
-        .otherwise(F.array().cast("array<struct<pos:int,h:long>>"))
-        .alias("_g"))
+        F.transform(word_ngrams(F.col("_w"), k, md5_60),
+                    lambda h, i: F.struct((i + 1).alias("pos"),
+                                          h.alias("h"))).alias("_g"))
     ex = _track_persist(
         spans.select("id", F.explode("_g").alias("g"))
         .select("id", F.col("g.pos").alias("pos"),

@@ -25,14 +25,24 @@ Scale design (the point at 10^12 docs):
   standard Spark iterative-algorithm requirement; GraphFrames does the
   same internally).
 * Convergence is detected with a (count, bit_xor-of-xxhash64) fingerprint
-  aggregate on the checkpointed edges — one cheap job per round, no
-  driver-side edge collection ever.
+  aggregate on the checkpointed edges — one cheap job per round.
+* Small graphs skip the loop: when the checkpointed edge set has at most
+  `config.COMPONENTS_DRIVER_MAX_EDGES` edges, they are collected and
+  resolved by a union-find on the driver, and the (node, component) map
+  comes back as a broadcast-hinted local frame. Each round of the loop
+  costs several Spark jobs of fixed overhead, which dominates on the
+  few-hundred-edge graphs LSH verification emits per 10^3 docs. The
+  driver never holds more than cap + 1 edges (budget stated beside the
+  cap); above it, edges never leave the executors.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import config as C
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -69,6 +79,31 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .union(mins.select("u", F.col("m").alias("v"))))
 
 
+def _union_find(edges) -> pd.DataFrame:
+    """(node, component = min node id of its component) for every node
+    of an edge list, by union-find with path compression. Linking the
+    larger root under the smaller keeps every root its set's minimum."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return pd.DataFrame({"node": list(parent),
+                         "component": [find(x) for x in parent]},
+                        dtype="int64")
+
+
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b",
                          max_iter: int = 25) -> DataFrame:
@@ -76,20 +111,28 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     component = the minimum node id reachable from it.
 
     `pairs` is an undirected edge list (duplicates / self-loops / either
-    orientation all fine). Alternates large-star and small-star until
-    the canonical edge-set fingerprint is stable; at the fixed point the
-    edges form a star forest (node → component root).
+    orientation all fine). Up to `config.COMPONENTS_DRIVER_MAX_EDGES`
+    distinct edges, a driver-side union-find resolves them and the
+    result is a broadcast-hinted local frame. Above it, alternates
+    large-star and small-star until the canonical edge-set fingerprint
+    is stable; at the fixed point the edges form a star forest
+    (node → component root).
     """
     spark = pairs.sparkSession
     edges = _canon(pairs.select(F.col(src).cast("long").alias("u"),
                                 F.col(dst).cast("long").alias("v")))
-    # Materialize the input graph ONCE before iterating: the pair
-    # generator feeding this is typically the expensive part of the
-    # plan, and without the checkpoint both the emptiness probe and
-    # round 1 would recompute it from scratch.
+    # Materialize the input graph ONCE: the pair generator feeding this
+    # is typically the expensive part of the plan, and without the
+    # checkpoint both the bounded collect and round 1 of the loop would
+    # recompute it from scratch.
     edges = edges.localCheckpoint(eager=True)
-    if not edges.take(1):
+    cap = C.COMPONENTS_DRIVER_MAX_EDGES
+    small = edges.take(cap + 1)
+    if not small:
         return spark.createDataFrame([], "node bigint, component bigint")
+    if len(small) <= cap:
+        return F.broadcast(spark.createDataFrame(
+            _union_find(small), "node bigint, component bigint"))
 
     prev_fp = None
     for _ in range(max_iter):
@@ -196,9 +239,10 @@ def resolve_duplicates(df: DataFrame, pairs: DataFrame, id_col: str,
     Rows absent from `pairs` are their own singleton cluster. The join
     key is the id column only — at 10^12 docs the component map has one
     row per *clustered* node (pair-graph nodes, typically a few percent
-    of the corpus), so AQE turns this into a broadcast join and document
-    text never crosses an exchange; `df.filter(~is_dup)` is the deduped
-    corpus.
+    of the corpus). Below the driver-side edge cap the map is a
+    broadcast-hinted local frame; above it AQE broadcasts it once its
+    size is known. Either way document text never crosses an exchange;
+    `df.filter(~is_dup)` is the deduped corpus.
     """
     comp = connected_components(pairs, src, dst) \
         .withColumnRenamed("node", id_col)

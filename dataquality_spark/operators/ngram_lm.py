@@ -50,21 +50,9 @@ from pyspark.sql import functions as F
 
 from ..caching import track_persist as _track_persist
 from ..caching import unpersist_all  # noqa: F401  (re-export, bench hook)
+from .text_analysis import _words, word_ngrams
 
 DEFAULT_SCALE = 1_000_000
-
-
-def _bigram_strings(text_col: str):
-    """Array of "w1 w2" bigram strings over the contract tokenizer;
-    empty array for docs with < 2 tokens."""
-    from .text_analysis import _words
-
-    words = _words(F.col(text_col))
-    m = F.size(words) - 1
-    return F.when(m > 0, F.transform(
-        F.sequence(F.lit(1), F.greatest(m, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i, 2))
-    )).otherwise(F.array().cast("array<string>"))
 
 
 def train_bigram_lm(corpus: DataFrame, text_col: str = "text",
@@ -86,7 +74,7 @@ def train_bigram_lm(corpus: DataFrame, text_col: str = "text",
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1: {min_count}")
     pairs = corpus.select(
-        F.explode(_bigram_strings(text_col)).alias("_f"))
+        F.explode(word_ngrams(_words(F.col(text_col)), 2)).alias("_f"))
     # persist: the pruned count table feeds BOTH the output rows and the
     # ctx aggregate — without it Spark re-scans the corpus and re-explodes
     # every gram for the second branch (plan-verified). Model-sized
@@ -161,8 +149,8 @@ def score_bigram_lm(docs: DataFrame, model: DataFrame,
     if broadcast_model:
         wts = F.broadcast(wts)
     oov = F.broadcast(_oov_weight(model, scale))
-    occ = (docs.select(F.col(id_col),
-                       F.explode(_bigram_strings(text_col)).alias("_f"))
+    bigrams = word_ngrams(_words(F.col(text_col)), 2)
+    occ = (docs.select(F.col(id_col), F.explode(bigrams).alias("_f"))
            .select(id_col,
                    F.split_part(F.col("_f"), F.lit(" "), F.lit(1))
                    .alias("w1"),

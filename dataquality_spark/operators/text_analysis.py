@@ -36,6 +36,30 @@ def _words(text: Column) -> Column:
                     lambda w: w != "")
 
 
+def word_ngrams(words: Column, n: int, f=None) -> Column:
+    """Array of the word n-grams of `words` in order, each space-joined
+    and mapped through `f` (a Column → Column function; default: the
+    gram string itself). Empty for docs with fewer than n words.
+
+    Built from n shifted slices zipped together, so `words` is
+    evaluated a fixed number of times per doc. Higher-order-function
+    lambdas run interpreted and re-evaluate any Column they reference
+    once per element: slicing `words` inside a per-position lambda
+    re-splits the text once per gram (quadratic in doc length)."""
+    k = F.greatest(F.size(words) - (n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(words, j + 1, k) for j in range(n)])
+    f = f or (lambda g: g)
+    return F.transform(zipped, lambda z: f(
+        F.concat_ws(" ", *[z[str(j)] for j in range(n)])))
+
+
+def md5_60(s: Column) -> Column:
+    """60-bit md5 prefix of a string as a positive BIGINT — the
+    SQL-portable gram hash (DuckDB reproduces
+    conv(substr(md5(s),1,15),16,10) bit-identically via a hex cast)."""
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+
+
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds n_ws_tokens (whitespace) and n_bpeish_tokens (subword proxy)."""
     text = F.coalesce(F.col(text_col), F.lit(""))
@@ -162,14 +186,7 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    words = _words(F.col(text_col))
-    n = F.size(words)
-    # sequence(0, x) DESCENDS for x<0, so short docs need an explicit
-    # empty-array branch, not a clamped bound
-    grams = F.when(n >= k, F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)))) \
-        .otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(_words(F.col(text_col)), k)
     g = (df.select(F.col(id_col).alias("id"), grams.alias("grams"))
          .where(F.size("grams") > 0)
          .select("id", F.posexplode("grams").alias("pos", "gram")))
@@ -205,22 +222,15 @@ def top_ngram_frac(df: DataFrame, text_col: str = "text",
 
     Scale design: a pure projection — the n-gram multiset is built and
     md5-hashed per row, sorted in-array, and the longest equal run is
-    found with one aggregate fold (O(L log L) per doc, zero shuffle,
-    whole-stage codegen). The relational formulation (explode →
-    groupBy(doc, gram)) would shuffle every n-gram occurrence in the
-    corpus; the oracle uses it at test scale to cross-check the fold.
+    found with one aggregate fold (O(L log L) per doc, zero shuffle;
+    the array functions run interpreted, outside whole-stage codegen).
+    The relational formulation (explode → groupBy(doc, gram)) would
+    shuffle every n-gram occurrence in the corpus; the oracle uses it
+    at test scale to cross-check the fold.
     md5-derived 60-bit gram hashes keep the oracle portable
     (dedup.md5_shingle_hashes rationale).
     """
-    words = _words(F.col(text_col))
-    k = F.size(words) - (n - 1)
-    grams = F.when(k > 0, F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(" ", F.slice(words, i, n))), 1, 15),
-            16, 10).cast("long")
-    )).otherwise(F.array().cast("array<long>"))
-    sorted_g = F.sort_array(grams)
+    sorted_g = F.sort_array(word_ngrams(_words(F.col(text_col)), n, md5_60))
 
     def _merge(acc, x):
         run = (F.when(acc["prev"].isNull() | (acc["prev"] != x),
@@ -347,25 +357,11 @@ def corpus_top_ngrams(df: DataFrame, text_col: str = "text",
     merge — never a global sort). At 10^12 docs the gram key space
     itself is the cost: bound it first (count-min prefilter or
     stop-gram cap) — the exact semantics here stay the ground truth."""
-    words = _words(F.col(text_col))
-    m = F.size(words) - (n - 1)
-    grams = F.when(m > 0, F.transform(
-        F.sequence(F.lit(1), F.greatest(m, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n))
-    )).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(_words(F.col(text_col)), n)
     return (df.select(F.explode(grams).alias("ngram"))
             .groupBy("ngram")
             .agg(F.count(F.lit(1)).cast("long").alias("n_occurrences"))
             .orderBy(F.desc("n_occurrences"), F.asc("ngram")).limit(k))
-
-
-def _string_grams(words: Column, n: int) -> Column:
-    """Array of word n-grams as space-joined strings (empty for < n words)."""
-    k = F.size(words) - (n - 1)
-    return F.when(k > 0, F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n))
-    )).otherwise(F.array().cast("array<string>"))
 
 
 def _seg_dup_stats(segs: Column) -> tuple[Column, Column, Column]:
@@ -773,7 +769,7 @@ def gopher_repetition(df: DataFrame, text_col: str = "text",
            .withColumn("dup_line_char_frac", dup_line_char_frac)
            .withColumn("norm_text_len", norm_len))
     for n in top_ns:
-        cover = _top_gram_cover(F.sort_array(_string_grams(words, n)))
+        cover = _top_gram_cover(F.sort_array(word_ngrams(words, n)))
         out = (out
                .withColumn(f"top_{n}gram_cover", cover)
                .withColumn(
@@ -784,7 +780,7 @@ def gopher_repetition(df: DataFrame, text_col: str = "text",
                        / F.col("norm_text_len").cast("double"))
                        .otherwise(F.lit(0.0)), 6)))
     for n in dup_ns:
-        dg = _dup_gram_chars(F.sort_array(_string_grams(words, n)))
+        dg = _dup_gram_chars(F.sort_array(word_ngrams(words, n)))
         out = (out
                .withColumn(f"_dg{n}", dg)
                .withColumn(f"dup_{n}gram_chars", F.col(f"_dg{n}")["dup"])

@@ -81,6 +81,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from dataquality_spark.errors import format_error_response  # noqa: E402
@@ -94,8 +95,10 @@ from dataquality_spark.session import get_spark  # noqa: E402
 # BEFORE argparse, with user-supplied flags appended after the recipe's
 # — so value options (e.g. --split, --shards) can be overridden on the
 # command line (argparse last-wins); store_true steps can only be added,
-# not removed. webtext-v1 expects (doc_id, url, text) columns — the
-# shape run_pipeline's kept-decisions output provides.
+# not removed. webtext-v1 expects a bigint `doc_id` (near-dup clusters
+# keep the minimum id) and string `url` and `text` columns. It does not
+# read run_pipeline's decisions as they are: those have no doc_id, and
+# their scrubbed text is `text_scrubbed`.
 RECIPES: dict[str, list[str]] = {
     # canonical webtext curation, in the job's fixed execution order:
     # url canonicalize+dedup → MinHash near-dup cluster dedup → C4 line
@@ -584,27 +587,39 @@ def _run(argv: list[str] | None = None) -> dict:
                                    salt=args.salt + 4)
         steps.append("shards")
 
-    df.write.mode("overwrite").parquet(args.output)
+    # The output stats are observed on the write itself: no read-back
+    # count or groupBy, so no extra Spark job per statistic.
+    # Chunking replaces the grain — doc-level flag and split columns
+    # are gone.
+    metrics = [F.count(F.lit(1)).alias("n_docs_out")]
+    if args.eval and not args.drop_contaminated \
+            and args.chunk_tokens is None:
+        metrics.append(F.count_if("contaminated").alias("n_contaminated"))
+    splits = (list(_parse_split(args.split))
+              if args.split and args.chunk_tokens is None else [])
+    metrics += [F.count_if(F.col("split") == name).alias(f"split_{i}")
+                for i, name in enumerate(splits)]
+    written = Observation("written")
+    df.observe(written, *metrics).write.mode("overwrite").parquet(
+        args.output)
     from dataquality_spark.caching import unpersist_all
     unpersist_all()  # release the decontamination shingle cache
 
-    out = spark.read.parquet(args.output)
-    n_out = out.count()
-    stats = {"n_docs_in": n_in, "n_docs_out": n_out,
+    seen = written.get
+    stats = {"n_docs_in": n_in, "n_docs_out": seen["n_docs_out"],
              "steps": steps,
              "elapsed_sec": round(time.monotonic() - t0, 3)}
     if recipe:
         stats["recipe"] = recipe
-    if args.eval and not args.drop_contaminated \
-            and args.chunk_tokens is None:
-        # chunking replaces the grain — doc-level flag columns are gone
-        stats["n_contaminated"] = out.where("contaminated").count()
-    if args.split and args.chunk_tokens is None:
+    if "n_contaminated" in seen:
+        stats["n_contaminated"] = seen["n_contaminated"]
+    if splits:
+        # only splits that received rows, as a groupBy would report
         stats["split_counts"] = {
-            r["split"]: r["n"] for r in
-            out.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
-            .collect()}
+            name: seen[f"split_{i}"] for i, name in enumerate(splits)
+            if seen[f"split_{i}"]}
     if args.audit:
+        out = spark.read.parquet(args.output)
         aud = (out.groupBy(F.spark_partition_id().alias("partition_id"))
                .agg(F.count(F.lit(1)).alias("n_docs"),
                     F.count_distinct(id_col).alias("n_distinct_ids"))

@@ -13,6 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from dataquality_spark import config as C
 from dataquality_spark.operators import dedup, graph
 
 
@@ -73,6 +74,44 @@ class TestConnectedComponents:
         assert _cc(spark, edges) == expect
 
 
+class TestConnectedComponentsDistributed(TestConnectedComponents):
+    """The same cases through the distributed large-star/small-star
+    loop: a cap of 0 sends every non-empty graph there. (The default
+    cap resolves every graph above with the driver-side union-find.)"""
+
+    @pytest.fixture(autouse=True, scope="class")
+    def _no_driver_path(self):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(C, "COMPONENTS_DRIVER_MAX_EDGES", 0)
+            yield
+
+    # redefined, not inherited: hypothesis refuses one @given test run
+    # from two classes
+    @settings(max_examples=15, deadline=None)
+    @given(st.lists(st.tuples(st.integers(0, 60), st.integers(0, 60)),
+                    min_size=1, max_size=120))
+    def test_matches_union_find_on_random_graphs(self, edges):
+        spark = get_test_spark()
+        real = [(a, b) for a, b in edges if a != b]
+        assert _cc(spark, edges) == _union_find(real)
+
+
+@pytest.mark.parametrize("cap, driver", [(3, False), (5, True)])
+def test_edge_cap_picks_the_path(spark, monkeypatch, cap, driver):
+    """Five distinct edges (a duplicate and a reversed copy collapse):
+    above a cap of 3 the distributed loop runs, at a cap of 5 the
+    driver-side union-find does, and both give the same components."""
+    calls = []
+    real = graph._union_find
+    monkeypatch.setattr(graph, "_union_find",
+                        lambda e: calls.append(len(e)) or real(e))
+    monkeypatch.setattr(C, "COMPONENTS_DRIVER_MAX_EDGES", cap)
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11), (2, 1), (1, 2)]
+    assert _cc(spark, edges) == {1: 1, 2: 1, 3: 1, 4: 1,
+                                 10: 10, 11: 10, 12: 10}
+    assert calls == ([5] if driver else [])
+
+
 def get_test_spark():
     # hypothesis cannot take the function-scoped fixture; reuse the
     # session the conftest fixture already started (same builder key).
@@ -105,7 +144,8 @@ class TestResolveDuplicates:
         assert pd.isna(out.loc[1, "dup_of"])
         dedup.unpersist_all()
 
-    def test_convergence_guard(self, spark):
+    def test_convergence_guard(self, spark, monkeypatch):
+        monkeypatch.setattr(C, "COMPONENTS_DRIVER_MAX_EDGES", 0)
         pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
         with pytest.raises(RuntimeError, match="converge"):
             graph.connected_components(pairs, max_iter=0)

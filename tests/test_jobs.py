@@ -757,6 +757,72 @@ def test_curate_recipe_webtext_v1(spark, tmp_path):
     assert out.agg(F.max("shard")).head()[0] <= 3  # override beat 64
 
 
+@pytest.fixture(scope="module")
+def kept_dir(spark, tmp_path_factory):
+    """300 kept docs with planted near-dup clusters (the benchmark's
+    curate_neardup generator) and the clusters' doc ids."""
+    from perfbench.inputs import kept_docs
+
+    docs, clusters = kept_docs(300, seed=1)
+    d = str(tmp_path_factory.mktemp("kept") / "docs")
+    spark.createDataFrame(docs).repartition(4).write.parquet(d)
+    return d, clusters
+
+
+def test_curate_webtext_v1_spark_jobs_and_observed_stats(
+        spark, kept_dir, tmp_path, capsys):
+    """webtext-v1 launches a bounded number of Spark jobs (the near-dup
+    components resolve on the driver, the output stats are observed on
+    the write), and the observed stats equal a read-back of the
+    output."""
+    from jobs import curate
+
+    inp, clusters = kept_dir
+    outp = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = "curate-job-count"
+    sc.setJobGroup(group, "webtext-v1")
+    try:
+        stats = curate.run(["--input", inp, "--output", outp,
+                            "--recipe", "webtext-v1"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 40, n_jobs
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert json.loads(line) == stats
+
+    out = spark.read.parquet(outp)
+    assert stats["n_docs_out"] == out.count()
+    assert stats["split_counts"] == {
+        r["split"]: r["count"] for r in out.groupBy("split").count()
+        .collect()}
+    kept = {r["doc_id"] for r in out.select("doc_id").collect()}
+    for members in clusters:          # one survivor: the source
+        assert kept & set(members) == {members[0]}
+
+
+def test_curate_webtext_v1_same_output_on_both_component_paths(
+        spark, kept_dir, tmp_path, monkeypatch):
+    """The driver-side union-find (default cap) and the distributed
+    large-star/small-star loop (cap 0) curate identical frames."""
+    from dataquality_spark import config as C
+    from jobs import curate
+
+    inp, _ = kept_dir
+    frames = []
+    for cap in (C.COMPONENTS_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(C, "COMPONENTS_DRIVER_MAX_EDGES", cap)
+        outp = str(tmp_path / f"cap{cap}")
+        curate.run(["--input", inp, "--output", outp,
+                    "--recipe", "webtext-v1"])
+        frames.append(spark.read.parquet(outp).toPandas()
+                      .sort_values("doc_id").reset_index(drop=True))
+    assert len(frames[0]) > 0
+    pd.testing.assert_frame_equal(frames[0], frames[1])
+
+
 def test_curate_job_url_patterns(spark, tmp_path):
     """--url-patterns drops matching urls (block mode)."""
     import pandas as pd
